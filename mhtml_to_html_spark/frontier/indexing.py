@@ -14,16 +14,64 @@ distributed:
 4. ``index = partition_offset + within_partition_position``.
 
 The total order is byte-identical to the window version as long as
-``order_cols`` is a TOTAL order (no ties) — both callers in the crawl
-qualify: (depth, host_rank, disc_seq) has a unique disc_seq, and
-(parent_pos, child_idx) is unique by construction.
+``order_cols`` is a TOTAL order (no ties) — every crawl ordering
+qualifies: (depth, host_rank, disc_seq) has a unique disc_seq,
+(parent_pos, child_idx) and the feeder's (parent fetch order, child
+index) are unique by construction, and recrawl's (host, rk) is
+unique because rk is a per-host row number.
+
+:func:`index_rows` is the crawl's ONE adaptive rule between the two
+shapes (batch fetch positions, discovery and recrawl sequence numbers,
+the streaming feeder's discovery numbering), and
+:data:`DISTRIBUTED_ROWS` is its one threshold — the batch crawl's
+salted priority repartition reads it too. Tests force the distributed
+path by monkeypatching that constant to 0.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+# Row count from which a crawl ordering goes distributed. Below it the
+# rows are few by definition and one partitionless window task is
+# cheaper than the two-pass index's range-sampling and offsets jobs;
+# above it that one task would funnel budget x hosts (or fanout x
+# fetched) rows.
+DISTRIBUTED_ROWS = 50_000
+
+
+def distributed(size: int) -> bool:
+    """True once ``size`` (the caller's estimate of the rows it orders)
+    reaches :data:`DISTRIBUTED_ROWS`, read at call time."""
+    return size >= DISTRIBUTED_ROWS
+
+
+def index_rows(
+    df: DataFrame,
+    order_cols: list[str],
+    out_col: str,
+    size: int,
+    start: int = 0,
+    n_rows: int | None = None,
+    num_partitions: int | None = None,
+) -> tuple[DataFrame, int | None]:
+    """Add ``out_col`` = ``start`` + the 0-based rank under the tie-free
+    total order ``order_cols``; returns ``(df, count)``. Distributed
+    (:func:`assign_global_index`, whose offsets job yields the count)
+    when :func:`distributed` holds for ``size``, else one partitionless
+    ``row_number`` window, which launches no job: its count is
+    ``n_rows`` — a number the caller already has, or None."""
+    if distributed(size):
+        return assign_global_index(
+            df, order_cols, out_col=out_col, start=start,
+            num_partitions=num_partitions, return_count=True,
+        )
+    w = Window.orderBy(*order_cols)
+    return df.withColumn(
+        out_col, (F.row_number().over(w) - 1 + F.lit(start)).cast("long")
+    ), n_rows
 
 
 def _local_index_batches(batches):

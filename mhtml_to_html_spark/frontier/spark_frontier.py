@@ -9,7 +9,8 @@ Each round (the Spark shape of SURVEY.md §3.3):
              ──salted repartitionByRange + secondary sort──▶ priority
              ──per-host budget window (+ opt-in politeness-debt boost,
                robots token-bucket)──▶ fetch_now / deferred
-             ──fetch UDF (scripted double, retry/backoff)──▶ results
+             ──fetch UDF (fetch_url: retry/backoff, payload decode,
+               discovery)──▶ results
              ──explode children──▶ discovered
     seen/failed/metrics updated; snapshot checkpoint; repeat.
 
@@ -17,6 +18,10 @@ Determinism contract: every "first" and every position is derived from
 explicit columns (depth, host_rank, disc_seq) — the pure-Python oracle
 (oracle.py) replays the same semantics and the outputs must match
 byte-for-byte (tests/test_frontier.py).
+
+:func:`fetch_url` is the one per-URL fetch kernel: the streaming
+politeness gate (streaming/frontier.py) calls it too, so both crawl
+shapes fetch, decode and discover identically.
 
 Scale notes (no single-partition exchange, no driver-held state):
 - the seen-set is the north_rule's partitioned counting-Bloom +
@@ -33,14 +38,12 @@ Scale notes (no single-partition exchange, no driver-held state):
 - the priority queue is repartitionByRange on (depth, host_rank,
   salt) + sortWithinPartitions: ranges keep the global order readable
   per partition, the salt splits hot hosts (skew);
-- global fetch positions and discovery sequence numbers are assigned
-  by indexing.assign_global_index (two-pass zipWithIndex trick over
-  range-partitioned data) once the frontier passes the same adaptive
-  threshold as the range partitioner — above it a partitionless
-  window would funnel budget×hosts (or fanout×fetched) rows through
-  one task; below it the rows are few by definition and the window is
-  cheaper. Both paths produce the identical logical order and both are
-  pinned to the oracle by tests;
+- global fetch positions, discovery and recrawl sequence numbers are
+  assigned by indexing.index_rows: the two-pass zipWithIndex trick
+  over range-partitioned data once the frontier reaches
+  indexing.DISTRIBUTED_ROWS (the threshold the range partitioner
+  reads too), a partitionless window below it. Both paths produce the
+  identical logical order and both are pinned to the oracle by tests;
 - per-round metrics are one agg; nothing per-row ever reaches the
   driver (the test-contract order collection at the very end is the
   only exception, and ``collect_order=False`` turns it off).
@@ -55,7 +58,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.catalog import SnapshotCatalog
-from .indexing import assign_global_index
+from .indexing import distributed, index_rows
 
 _FRONTIER_SCHEMA = "url string, depth int, disc_seq long"
 _CANON_SCHEMA = (
@@ -67,6 +70,16 @@ _FETCH_SCHEMA = (
 )
 _SEEN_SCHEMA = "key string, h64 long, host string, fetched_round int"
 _SHARD_BLOB_SCHEMA = "shard int, bloom binary, cuckoo binary"
+
+# salt buckets of the step-4 priority repartition: split a hot host's
+# rows across range partitions
+_SALT_BUCKETS = 4
+# host-keyed side tables (robots cache, politeness debt) are broadcast
+# up to this many hosts; past it a forced broadcast is an executor OOM
+# at 10^7-10^8 hosts, so they hash-join on `host`
+_BROADCAST_MAX_HOSTS = 100_000
+# target rows per fetch task (see step 7)
+_FETCH_ROWS_PER_TASK = 24
 
 
 def _canonicalize_batches(batches):
@@ -248,26 +261,21 @@ def _robots_batches(batches):
         )
 
 
-def extract_links(body: bytes) -> list[str]:
+def extract_links(archive) -> list[str]:
     """Anchor URLs of a fetched archive's index document — the
     real-crawl discovery path (the reference's collecting walk over
-    the converted page, lib/convert.js:129-146): parse the MHTML,
-    take the index document (already charset-decoded by the splitter
+    the converted page, lib/convert.js:129-146): take the parsed
+    MHTML's index document (already charset-decoded by the splitter
     cascade), resolve every <a href> against its Content-Location,
     keep the fetchable ones in document order, first occurrence wins.
-    Runs inside the fetch UDF on bytes already in memory — no second
-    pass over the corpus."""
+    :func:`fetch_url` runs it on the archive it has already parsed for
+    the payload decode — no second pass over the bytes."""
     import urllib.parse
 
     from ..mime.dom import Element, parse_html
-    from ..mime.splitter import parse_mhtml
     from ..urlnorm import is_fetchable
 
-    try:
-        res = parse_mhtml(body)
-    except Exception:
-        return []
-    index = next((part for part in res.parts if part.is_index), None)
+    index = next((part for part in archive.parts if part.is_index), None)
     if index is None or not index.text:
         return []
     base = index.content_location or ""
@@ -297,6 +305,81 @@ def extract_links(body: bytes) -> list[str]:
     return out
 
 
+@functools.lru_cache(maxsize=64)
+def _cached_archive(idx: int, images: int, scale: int) -> bytes:
+    """Synthetic-body pool for ``decode_payload`` with the scripted
+    double: corpus synthesis stands in for the network body, which
+    production never pays, so it is amortized over a pool of at most
+    64 archives (~0.5 MB at the default 2 images, scale 1) that lives
+    for the Python worker's lifetime. The DECODE runs per URL,
+    uncached — that is the measured work."""
+    from ..sources.corpus import build_archive
+
+    return build_archive(idx, images, scale)
+
+
+def fetch_url(
+    key: str,
+    fetcher: str = "double",
+    discover: str | None = "scripted",
+    decode_payload: bool = False,
+    payload_images: int = 2,
+    payload_scale: int = 1,
+    fanout: int = 3,
+    n_hosts: int = 7,
+) -> tuple[str, int, int, list[str]]:
+    """The per-URL fetch kernel of both crawl shapes (the batch fetch
+    UDF and the streaming politeness gate): one URL through the
+    reference retry loop (lib/convert.js:148-228), the inline MHTML
+    payload decode, and child discovery. Returns (status, attempts,
+    delay_ms, children).
+
+    ``fetcher="http"`` fetches over real sockets with the same retry
+    code as the scripted double (frontier/httpclient.py). With
+    ``decode_payload`` every ok fetch decodes its body: the real bytes
+    with the http client (an empty body decodes nothing), a pooled
+    synthetic archive with the double. Children of ok fetches are
+    either the anchors of the fetched archive (``discover="parse"``,
+    http only; the archive is parsed once for decode and discovery)
+    or the scripted world's (``"scripted"``, whatever the fetcher),
+    eligibility-filtered in document order — all the (parent,
+    child_idx) numbering contract needs. ``discover=None`` discovers
+    nothing."""
+    body = b""
+    if fetcher == "http":
+        from .httpclient import fetch_url_with_retries
+
+        status, attempts, delay_ms, _ct, body = fetch_url_with_retries(key)
+    else:
+        from .fixtures import fetch_with_retries
+
+        status, attempts, delay_ms = fetch_with_retries(key)
+    if status != "ok":
+        return status, attempts, delay_ms, []
+    if decode_payload and fetcher != "http":
+        from .seenset import url_hash64
+
+        body = _cached_archive(url_hash64(key) % 64, payload_images, payload_scale)
+    parsed = None
+    if body and (decode_payload or discover == "parse"):
+        from ..mime.splitter import parse_mhtml
+
+        try:
+            parsed = parse_mhtml(body)
+        except Exception:
+            if decode_payload:
+                raise  # an undecodable payload fails the task
+    children: list[str] = []
+    if discover == "parse":
+        children = extract_links(parsed) if parsed is not None else []
+    elif discover == "scripted":
+        from ..urlnorm import is_fetchable
+        from .fixtures import children_of
+
+        children = [c for c in children_of(key, fanout, n_hosts) if is_fetchable(c)]
+    return status, attempts, delay_ms, children
+
+
 def _fetch_batches(
     batches,
     decode_payload: bool = False,
@@ -304,73 +387,32 @@ def _fetch_batches(
     payload_scale: int = 1,
     hold_ms: int = 0,
     fetcher: str = "double",
-    http_timeout: float = 10.0,
     discover: str = "scripted",
     fanout: int = 3,
     n_hosts: int = 7,
 ):
-    import functools as _ft
+    """The batch crawl's fetch UDF: :func:`fetch_url` per manifest row.
+    Children ride the same pass (one Python stage per round)."""
     import time as _t
 
     import pandas as pd
 
-    from ..urlnorm import is_fetchable
-    from .fixtures import children_of, fetch_with_retries
     from .seenset import url_hash64
-
-    if fetcher == "http":
-        from .httpclient import fetch_url_with_retries
-    if decode_payload:
-        from ..mime.splitter import parse_mhtml
-        from ..sources.corpus import build_archive
-
-        # corpus synthesis stands in for the network body; production
-        # never pays it, so amortize it per worker over a bounded pool
-        # of distinct archives (the DECODE runs per URL, uncached —
-        # that is the measured work)
-        cached_build = _ft.lru_cache(maxsize=64)(build_archive)
 
     for pdf in batches:
         rows = []
         for key, host, depth, disc_seq, pos in zip(
             pdf["key"], pdf["host"], pdf["depth"], pdf["disc_seq"], pdf["pos"]
         ):
-            body = b""
-            if fetcher == "http":
-                # the production seam: real sockets, same retry
-                # contract/code as the double (frontier/httpclient.py)
-                status, attempts, delay_ms, _ct, body = fetch_url_with_retries(
-                    key, timeout=http_timeout
-                )
-            else:
-                status, attempts, delay_ms = fetch_with_retries(key)
-            h64 = url_hash64(key)
+            status, attempts, delay_ms, children = fetch_url(
+                key, fetcher, discover, decode_payload, payload_images,
+                payload_scale, fanout, n_hosts,
+            )
             if hold_ms:
                 # per-attempt service-time hold, the reference's own
                 # benchmarking technique (test/concurrency.test.js:56-63)
                 _t.sleep(attempts * hold_ms / 1000.0)
-            if decode_payload and status == "ok":
-                # the fetched body IS an MHTML archive: run the payload
-                # stage inline (north-rule metric: URLs fetched+DECODED).
-                # With the real client the REAL bytes are decoded; the
-                # double synthesizes a stand-in body
-                if fetcher == "http" and body:
-                    parse_mhtml(body)
-                else:
-                    parse_mhtml(cached_build(h64 % 64, payload_images, payload_scale))
-            children: list[str] = []
-            if discover == "parse" and status == "ok" and body:
-                # real-crawl discovery: links come from the fetched
-                # bytes, not the scripted children_of world
-                children = extract_links(body)
-            elif discover == "scripted" and status == "ok":
-                # scripted discovery rides the same fetch pass (one
-                # Python stage per round instead of two); eligibility
-                # filtering here preserves document order, which is
-                # all the (parent_pos, child_idx) contract needs
-                children = [
-                    c for c in children_of(key, fanout, n_hosts) if is_fetchable(c)
-                ]
+            h64 = url_hash64(key)
             rows.append(
                 {
                     "key": key,
@@ -412,7 +454,6 @@ def crawl_spark(
     host_budget: int = 8,
     checkpoint_dir: str | None = None,
     resume: bool = False,
-    salt_buckets: int = 4,
     collect_order: bool = False,
     decode_payload: bool = False,
     fanout: int = 3,
@@ -421,21 +462,16 @@ def crawl_spark(
     payload_scale: int = 1,
     hold_ms: int = 0,
     use_robots: bool = False,
-    range_partition_threshold: int = 50_000,
     seen_shards: int = 8,
     seen_bloom_bits: int = 1 << 18,
     seen_cuckoo_buckets: int = 1 << 13,
     probe_threshold: int = 20_000,
-    robots_broadcast_threshold: int = 100_000,
     robots_flatten_every: int = 8,
     recrawl_budget: int = 0,
     max_recrawls: int = 1,
     debt_boost: bool = False,
-    verbose: bool = False,
     fetcher: str = "double",
-    http_timeout: float = 10.0,
     discover: str = "scripted",
-    fetch_rows_per_task: int = 24,
 ) -> SparkCrawlResult:
     """Run the crawl to fixpoint (or ``max_rounds``); optionally
     checkpoint each round to ``checkpoint_dir`` and resume from the
@@ -483,18 +519,11 @@ def crawl_spark(
     # adds into the shard blobs before that point is a pure
     # shuffle+checkpoint tax — one cogroup per round for nothing
     seen_pending = None
-    seenset_loaded = False
     if resume and catalog is not None and catalog.latest() is not None:
         manifest = catalog.latest()
         snap = manifest["snapshot_id"]
         frontier = catalog.load_table(spark, snap, "frontier")
         seen = catalog.load_table(spark, snap, "seen")
-        # pre-recrawl snapshots lack (host, fetched_round): null-fill
-        # (additive schema evolution, same rule the catalog applies)
-        if "host" not in seen.columns:
-            seen = seen.withColumn("host", F.lit(None).cast("string"))
-        if "fetched_round" not in seen.columns:
-            seen = seen.withColumn("fetched_round", F.lit(None).cast("int"))
         failed = catalog.load_table(spark, snap, "failed")
         start_round = manifest["round"] + 1
         disc_total = manifest["metrics"]["disc_total"]
@@ -507,16 +536,12 @@ def crawl_spark(
         else:
             robots_cache = empty_robots
             blocked = empty_keys
-        try:
-            seenset_df = catalog.load_table(spark, snap, "seenset")
-            seenset_loaded = True
-        except Exception:
-            pass  # pre-seenset snapshot: rebuilt below
-        if debt_boost:
-            try:
-                debt_df = catalog.load_table(spark, snap, "debt")
-            except Exception:
-                debt_df = empty_debt  # pre-debt snapshot: no boost info
+        # a corrupt table fails the resume loudly; only a table the
+        # snapshot never had (debt, written only with debt_boost) is
+        # legitimately absent
+        seenset_df = catalog.load_table(spark, snap, "seenset")
+        if debt_boost and "debt" in manifest["tables"]:
+            debt_df = catalog.load_table(spark, snap, "debt")
     else:
         rows = []
         for url in seeds:
@@ -551,15 +576,6 @@ def crawl_spark(
     n_pending = 0
 
     have_seen = start_round > 0
-    if have_seen and not seenset_loaded:
-        # pre-seenset checkpoint: rebuild the hybrid distributed from
-        # the exact key tables (one cogroup pass, one task per shard)
-        rebuilt_from = seen.select("key", "h64").unionByName(failed)
-        if use_robots:
-            rebuilt_from = rebuilt_from.unionByName(blocked)
-        seenset_df = seenset_merge(
-            seenset_df, rebuilt_from, seen_shards, seen_bloom_bits, seen_cuckoo_buckets
-        ).localCheckpoint(eager=True)
     expected_frontier = frontier.count()
     seen_total = sum(m["fetched"] + m.get("blocked", 0) for m in result.metrics)
     n_par = max(spark.sparkContext.defaultParallelism, 4)
@@ -583,7 +599,7 @@ def crawl_spark(
         #    counting-Bloom decrements, the cuckoo deletes its
         #    fingerprint (deletion is why the Bloom counts) — so the
         #    unchanged exactly-once machinery re-admits exactly them.
-        #    Same adaptive index rule as steps 4/6 (hosts×budget rows
+        #    Same adaptive index rule as steps 6/9 (hosts×budget rows
         #    can be huge at 10^7 hosts).
         n_recrawled = 0
         if expected_frontier == 0 and recrawl_budget > 0 and recrawls_done < max_recrawls:
@@ -592,21 +608,11 @@ def crawl_spark(
                 host_budget=recrawl_budget,
                 current_round=round_idx,
             )
-            if seen_total >= range_partition_threshold:
-                revisits, n_recrawled = assign_global_index(
-                    revisits,
-                    ["host", "rk"],
-                    out_col="rseq",
-                    start=disc_total,
-                    num_partitions=n_par,
-                    return_count=True,
-                )
-            else:
-                w_r = Window.orderBy("host", "rk")
-                revisits = revisits.withColumn(
-                    "rseq",
-                    (F.row_number().over(w_r) - 1 + F.lit(disc_total)).cast("long"),
-                )
+            revisits, n_recrawled = index_rows(
+                revisits, ["host", "rk"], "rseq", size=seen_total,
+                start=disc_total, num_partitions=n_par,
+            )
+            if n_recrawled is None:
                 revisits = revisits.localCheckpoint(eager=True)
                 n_recrawled = revisits.count()
             if n_recrawled:
@@ -694,11 +700,9 @@ def crawl_spark(
         #     met hosts ('fetched' via the deterministic double), then a
         #     join classifies candidates; disallowed URLs go to the
         #     permanent blocked set. The cache grows with every host
-        #     ever met, so the join is ADAPTIVE like the index/range
-        #     steps: broadcast while the cache is small, plain hash
-        #     join on `host` once it passes the threshold (at 10^7-10^8
-        #     hosts a forced broadcast is a multi-GB executor OOM; the
-        #     hash join's exchange is then reused by the step-5
+        #     ever met, so the join is ADAPTIVE: broadcast up to
+        #     _BROADCAST_MAX_HOSTS, plain hash join on `host` past it
+        #     (the hash join's exchange is then reused by the step-5
         #     politeness window, which partitions by host anyway).
         n_blocked = 0
         newly_blocked = None
@@ -744,7 +748,7 @@ def crawl_spark(
             # the cache only grows, so once it crosses the threshold
             # the hash join latches; the counter is incremental — no
             # per-round count() over the cache
-            if not robots_large and n_robots_hosts > robots_broadcast_threshold:
+            if not robots_large and n_robots_hosts > _BROADCAST_MAX_HOSTS:
                 robots_large = True
             robots_side = robots_cache if robots_large else F.broadcast(robots_cache)
             path = F.regexp_replace(F.col("key"), "^[a-zA-Z]+://[^/]+", "")
@@ -771,13 +775,14 @@ def crawl_spark(
         #    (the physical order); politeness + positions derive from
         #    the same explicit (depth, host_rank, disc_seq) columns.
         #    repartitionByRange costs a sampling pass over the input, so
-        #    it is applied adaptively: only once the frontier is big
-        #    enough that range-clustered partitions pay for themselves
-        #    (at 10^10 that is every round; at test scale it would be
-        #    pure overhead). The LOGICAL order never depends on it —
-        #    the windows sort on the same explicit keys.
-        if expected_frontier >= range_partition_threshold:
-            salt = (F.xxhash64("key") % salt_buckets).cast("int")
+        #    it is applied adaptively, by the same threshold as the
+        #    index steps: only once the frontier is big enough that
+        #    range-clustered partitions pay for themselves (at 10^10
+        #    that is every round; at test scale it would be pure
+        #    overhead). The LOGICAL order never depends on it — the
+        #    windows sort on the same explicit keys.
+        if distributed(expected_frontier):
+            salt = (F.xxhash64("key") % _SALT_BUCKETS).cast("int")
             prioritized = candidates.withColumn("salt", salt).repartitionByRange(
                 n_par,
                 "depth",
@@ -791,9 +796,6 @@ def crawl_spark(
         #    round. Materialize ONCE — everything downstream (fetch
         #    manifest, deferred frontier, counts) derives from this
         #    single evaluation of the round pipeline.
-        import time as _time
-
-        _t0 = _time.perf_counter()
         if debt_boost:
             # politeness-debt boost: hosts whose queue overflowed LAST
             # round get base + min(debt, base) this round (bounded 2x).
@@ -803,7 +805,7 @@ def crawl_spark(
             # n_debt_hosts came out of LAST round's politeness agg —
             # no extra count() job (resume conservatively broadcasts:
             # the table holds only overflowed hosts)
-            if n_debt_hosts > robots_broadcast_threshold:
+            if n_debt_hosts > _BROADCAST_MAX_HOSTS:
                 debt_side = debt_df
             else:
                 debt_side = F.broadcast(debt_df)
@@ -830,7 +832,6 @@ def crawl_spark(
         # lazy: the bcounts agg right below materializes (and persists)
         # it in the same job; fetch_now/deferred then read the blocks
         budgeted = budgeted.localCheckpoint(eager=False)
-        _t1 = _time.perf_counter()
         # ONE agg answers "is the frontier drained?", the deferred
         # count, the debt-host count AND (robots) the blocked count —
         # separate driver jobs otherwise
@@ -878,31 +879,21 @@ def crawl_spark(
             ok_rows & (F.col("host_pos") > F.col("token_budget"))
         ).select(*pend_cols)
 
-        # 6. global fetch position (ordering contract). Above the same
-        #    adaptive threshold as step 4, a distributed two-pass index
-        #    over (depth, host_rank, disc_seq) — at budget×hosts rows
-        #    per round a partitionless window would single-task the
-        #    whole manifest. Below it the manifest is small by
-        #    definition and the window is cheaper (same logical order
-        #    either way; tests force both paths against the oracle).
-        use_dist_index = expected_frontier >= range_partition_threshold
-        manifest_cols = fetch_now.select("key", "host", "depth", "host_rank", "disc_seq")
-        if use_dist_index:
-            manifest_df = assign_global_index(
-                manifest_cols,
-                ["depth", "host_rank", "disc_seq"],
-                out_col="pos",
-                num_partitions=n_par,
-            )
-        else:
-            w_global = Window.orderBy("depth", "host_rank", "disc_seq")
-            manifest_df = manifest_cols.withColumn(
-                "pos", (F.row_number().over(w_global) - 1).cast("long")
-            )
+        # 6. global fetch position (ordering contract): the adaptive
+        #    index over (depth, host_rank, disc_seq) — distributed at
+        #    budget×hosts rows, one window task below the threshold
+        #    (same logical order either way; tests force both paths
+        #    against the oracle).
+        manifest_df, _ = index_rows(
+            fetch_now.select("key", "host", "depth", "host_rank", "disc_seq"),
+            ["depth", "host_rank", "disc_seq"], "pos", size=expected_frontier,
+            num_partitions=n_par,
+        )
 
-        # 7. fetch (scripted double, retry/backoff inside the UDF) —
-        #    repartition the manifest so the politeness-bounded fetch
-        #    set spreads across every core, then materialize once
+        # 7. fetch (fetch_url per row: retry/backoff, payload decode,
+        #    discovery) — repartition the manifest so the
+        #    politeness-bounded fetch set spreads across every core,
+        #    then materialize once
         fetch_fn = functools.partial(
             _fetch_batches,
             decode_payload=decode_payload,
@@ -910,7 +901,6 @@ def crawl_spark(
             payload_scale=payload_scale,
             hold_ms=hold_ms,
             fetcher=fetcher,
-            http_timeout=http_timeout,
             discover=discover,
             fanout=fanout,
             n_hosts=n_hosts,
@@ -924,7 +914,7 @@ def crawl_spark(
         # 8-waves-per-slot policy put ~1 row in each of 256 tasks at
         # toy rounds and cost the round-4 bench 16.3s → 24s; the
         # round-5 bisect pinned it to exactly that commit). Policy:
-        # enough partitions that a task holds ~fetch_rows_per_task
+        # enough partitions that a task holds ~_FETCH_ROWS_PER_TASK
         # rows, never fewer than one wave (all slots busy once there
         # is enough work), capped at 8 waves per slot — at 10^10-URL
         # rounds the cap binds and the behavior is the old fine-wave
@@ -932,7 +922,7 @@ def crawl_spark(
         # enough to amortize their fixed cost.
         n_fetchable = int(bcounts["fetchable"] or 0)
         n_fetch_parts = min(
-            n_par * 8, max(n_par, -(-n_fetchable // fetch_rows_per_task))
+            n_par * 8, max(n_par, -(-n_fetchable // _FETCH_ROWS_PER_TASK))
         )
         # Distribution WITHIN the stage: keyless ROUND-ROBIN, not hash
         # and (since r6) not range. Hash placement is binomial — at
@@ -987,16 +977,17 @@ def crawl_spark(
         ).collect()[0]
         n_fetched = int(stats["n"] or 0)
         n_ok = int(stats["ok"] or 0)
-        _t2 = _time.perf_counter()
 
         # 9. link discovery from ok fetches; disc_seq continues the
         #    global counter in (parent_pos, child_idx) order — same
-        #    distributed index assignment (fanout×fetched rows is the
-        #    bigger of the two per-round orderings). Children — parsed
-        #    from the fetched bodies or scripted, both already
+        #    adaptive index (fanout×fetched rows is the bigger of the
+        #    two per-round orderings). Children — parsed from the
+        #    fetched bodies or scripted, both already
         #    eligibility-filtered in document order — are emitted by
         #    the fetch UDF itself: one JVM-side posexplode, never a
-        #    second Python pass over the round.
+        #    second Python pass over the round. The window path's
+        #    count is the stats agg's sum of children sizes — the
+        #    exact posexplode row count, no dedicated count job.
         ok = fetched.filter(F.col("status") == "ok")
         children = ok.select(
             "pos", "depth", F.posexplode("children").alias("child_idx", "url")
@@ -1006,26 +997,11 @@ def crawl_spark(
             "url",
             (F.col("depth") + 1).cast("int").alias("depth"),
         )
-        if use_dist_index:
-            discovered, n_discovered = assign_global_index(
-                children,
-                ["parent_pos", "child_idx"],
-                out_col="disc_seq",
-                start=disc_total,
-                num_partitions=n_par,
-                return_count=True,
-            )
-            discovered = discovered.select("url", "depth", "disc_seq")
-        else:
-            w_child = Window.orderBy("parent_pos", "child_idx")
-            discovered = children.withColumn(
-                "disc_seq",
-                (F.row_number().over(w_child) - 1 + F.lit(disc_total)).cast("long"),
-            ).select("url", "depth", "disc_seq")
-            # the window path's discovery count comes from the stats
-            # agg (sum of children sizes) — the exact posexplode row
-            # count, no dedicated count job
-            n_discovered = int(stats["n_children"] or 0)
+        discovered, n_discovered = index_rows(
+            children, ["parent_pos", "child_idx"], "disc_seq", size=expected_frontier,
+            start=disc_total, n_rows=int(stats["n_children"] or 0), num_partitions=n_par,
+        )
+        discovered = discovered.select("url", "depth", "disc_seq")
 
         # 10. state updates — all distributed: the hybrid seen-set via
         #    a per-shard cogroup fold (one task per shard, work = blob
@@ -1086,12 +1062,6 @@ def crawl_spark(
             "recrawled": n_recrawled,
         }
         result.metrics.append(round_metrics)
-        if verbose:
-            print(
-                f"round {round_idx}: pipeline={_t1 - _t0:.2f}s fetch={_t2 - _t1:.2f}s "
-                f"post={_time.perf_counter() - _t2:.2f}s fetched={n_fetched}",
-                flush=True,
-            )
 
         # fresh rows next round = discoveries only; the deferred
         # backlog stays canonical in `pending`

@@ -34,6 +34,18 @@ class SnapshotCatalog:
     def _snap_dir(self, snapshot_id: int) -> str:
         return os.path.join(self.root, "snapshots", f"snap_{snapshot_id:06d}")
 
+    def _write_manifest(self, snapshot_id: int, manifest: dict[str, Any]) -> None:
+        """Commit a snapshot: the manifest's existence is the commit
+        marker, so it is written to a temp file and swapped in with
+        ``os.replace`` (atomic on POSIX — Iceberg's metadata swap). A
+        crash mid-dump leaves only the temp file, which no reader
+        lists; the previous snapshot stays the latest."""
+        path = os.path.join(self._snap_dir(snapshot_id), "manifest.json")
+        tmp = path + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(manifest, f, indent=1, sort_keys=True)
+        os.replace(tmp, path)
+
     def list_snapshots(self) -> list[int]:
         base = os.path.join(self.root, "snapshots")
         ids = []
@@ -83,8 +95,7 @@ class SnapshotCatalog:
                 files.append({"file": os.path.basename(row["file"]), "rows": row["count"]})
                 total += row["count"]
             manifest["tables"][name] = {"rows": total, "files": sorted(files, key=lambda f: f["file"])}
-        with open(os.path.join(snap_dir, "manifest.json"), "w") as f:
-            json.dump(manifest, f, indent=1, sort_keys=True)
+        self._write_manifest(snapshot_id, manifest)
         return snapshot_id
 
     # -- read ---------------------------------------------------------------
@@ -124,8 +135,7 @@ class SnapshotCatalog:
             man["tables"][other] = {**entry, "path": path}
             changed = True
         if changed:
-            with open(os.path.join(self._snap_dir(snapshot_id), "manifest.json"), "w") as f:
-                json.dump(man, f, indent=1, sort_keys=True)
+            self._write_manifest(snapshot_id, man)
 
     # -- maintenance ---------------------------------------------------------
 

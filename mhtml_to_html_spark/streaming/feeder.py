@@ -17,12 +17,13 @@ crawl's own pattern, ``spark_frontier.py`` steps 6-8):
 - the driver holds ONLY per-round counters (one ``agg`` row per
   round) and the frontier parquet path; no gate output row, child
   URL, or frontier row is ever collected;
-- the next frontier = deferred rows ∪ exploded children, with
-  ``disc_seq`` assigned by the distributed two-pass indexer
-  (``frontier/indexing.py:assign_global_index``) above the same
-  adaptive threshold as the batch crawl (below it the round is small
-  by definition and one window task is cheaper — same total order
-  either way, both paths pinned against the oracle);
+- the next frontier = deferred rows ∪ exploded children (the gate
+  emits every ok fetch's children in both discover modes), with
+  ``disc_seq`` assigned by the batch crawl's adaptive index rule
+  (``frontier/indexing.py:index_rows`` — distributed two-pass index
+  from ``DISTRIBUTED_ROWS`` expected children, one window task below
+  it; same total order either way, both paths pinned against the
+  oracle);
 - all frontier/sink writes are plain distributed parquet writes
   (no single-task write funnels).
 ``tests/test_plans.py::test_feeder_round_path_never_collects`` gates
@@ -52,13 +53,13 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _FRONTIER_SCHEMA = "url string, depth int, disc_seq long"
-_CHILD_SCHEMA = (
-    "p_depth int, p_rank int, p_seq long, child_idx int, url string, depth int"
-)
+# one availableNow pass of the gate that runs longer than this fails
+# the round loudly instead of committing a partial sink
+_PASS_TIMEOUT_S = 600
 _CHILD_ORDER = ["p_depth", "p_rank", "p_seq", "child_idx"]
 _ORDER_KEYS = ("round", "pos", "url", "depth", "status", "attempts")
 
@@ -79,33 +80,6 @@ def host_rank_col(host: Column) -> Column:
     )
 
 
-def _scripted_children_batches(batches, fanout: int, n_hosts: int):
-    """Children of ok fetches in the scripted world, tagged with the
-    parent's fetch-order key (depth, host_rank, disc_seq) + document
-    position — the total order the distributed indexer numbers.
-    Mirrors the batch crawl's scripted-discovery contract (the fetch
-    UDF in spark_frontier.py emits eligibility-filtered children in
-    document order): unfetchable children are dropped BEFORE
-    numbering, exactly the oracle's disc counter semantics."""
-    import pandas as pd
-
-    from ..frontier.fixtures import children_of
-    from ..urlnorm import is_fetchable
-
-    cols = ["p_depth", "p_rank", "p_seq", "child_idx", "url", "depth"]
-    for pdf in batches:
-        rows = []
-        for depth, rank, seq, key in zip(
-            pdf["depth"], pdf["host_rank"], pdf["disc_seq"], pdf["key"]
-        ):
-            for j, child in enumerate(children_of(key, fanout, n_hosts)):
-                if is_fetchable(child):
-                    rows.append(
-                        (int(depth), int(rank), int(seq), j, child, int(depth) + 1)
-                    )
-        yield pd.DataFrame(rows, columns=cols)
-
-
 _COUNTER_AGGS = lambda: [  # noqa: E731 — shared by the agg and observe paths
     F.count(F.lit(1)).alias("n"),
     F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("ok"),
@@ -120,19 +94,17 @@ _COUNTER_KEYS = ("n", "ok", "failed", "deferred", "blocked")
 def _next_frontier(
     out: DataFrame,
     disc: int,
-    discover: str,
     fanout: int,
-    n_hosts: int,
-    dist_index_threshold: int,
     counters: dict | None = None,
-) -> tuple[DataFrame, int, dict]:
+) -> tuple[DataFrame, int | None, dict]:
     """One round's barrier, all DataFrame ops: counters via ONE agg
     (skipped when the caller already observed them on the stream —
     the same numbers, collected by the micro-batch itself), next
     frontier = deferred ∪ children-of-ok with ``disc_seq`` continuing
     the global counter in (parent fetch order, document order).
-    Returns (frontier_df, n_discovered, counters)."""
-    from ..frontier.indexing import assign_global_index
+    Returns (frontier_df, n_discovered or None on the window path,
+    counters)."""
+    from ..frontier.indexing import index_rows
 
     if counters is None:
         c = out.agg(*_COUNTER_AGGS()).collect()[0]
@@ -144,45 +116,25 @@ def _next_frontier(
     ok = out.filter(F.col("status") == "ok").withColumn(
         "host_rank", host_rank_col(F.col("host"))
     )
-    if "children" in out.columns:
-        # links came out of the gate itself (parse mode: extracted from
-        # the fetched bytes; scripted mode: emit_children riding the
-        # fetch — both already eligibility-filtered, document order):
-        # one JVM-side posexplode, no second Python pass per round
-        children = ok.select(
-            F.col("depth").alias("p_depth"),
-            F.col("host_rank").alias("p_rank"),
-            F.col("disc_seq").alias("p_seq"),
-            F.posexplode("children").alias("child_idx", "url"),
-            (F.col("depth") + 1).cast("int").alias("depth"),
-        )
-    else:
-        import functools
-
-        children = ok.select("key", "host_rank", "depth", "disc_seq").mapInPandas(
-            functools.partial(
-                _scripted_children_batches, fanout=fanout, n_hosts=n_hosts
-            ),
-            schema=_CHILD_SCHEMA,
-        )
-
+    # links came out of the gate itself (parse mode: extracted from
+    # the fetched bytes; scripted mode: emit_children riding the
+    # fetch — both already eligibility-filtered, document order):
+    # one JVM-side posexplode, no second Python pass per round
+    children = ok.select(
+        F.col("depth").alias("p_depth"),
+        F.col("host_rank").alias("p_rank"),
+        F.col("disc_seq").alias("p_seq"),
+        F.posexplode("children").alias("child_idx", "url"),
+        (F.col("depth") + 1).cast("int").alias("depth"),
+    )
     # disc_seq continues the crawl-global counter under the total
-    # order (parent fetch order, child document order) — distributed
-    # two-pass index above the adaptive threshold, one window task
-    # below it (the round is tiny by definition there); identical
-    # total order either way, both paths oracle-pinned
-    expected = counters["ok"] * max(fanout, 1)
-    if expected >= dist_index_threshold:
-        discovered, n_disc = assign_global_index(
-            children, _CHILD_ORDER, out_col="disc_seq", start=disc, return_count=True
-        )
-        discovered = discovered.select("url", "depth", "disc_seq")
-    else:
-        w = Window.orderBy(*_CHILD_ORDER)
-        discovered = children.withColumn(
-            "disc_seq", (F.row_number().over(w) - 1 + F.lit(disc)).cast("long")
-        ).select("url", "depth", "disc_seq")
-        n_disc = None  # folded into the frontier count below
+    # order (parent fetch order, child document order); on the window
+    # path the count is folded into the frontier count by the caller
+    discovered, n_disc = index_rows(
+        children, _CHILD_ORDER, "disc_seq", size=counters["ok"] * max(fanout, 1),
+        start=disc,
+    )
+    discovered = discovered.select("url", "depth", "disc_seq")
 
     frontier = deferred.unionByName(discovered)
     return frontier, n_disc, counters
@@ -205,12 +157,9 @@ def stream_crawl_job(
     stop_after_round: int | None = None,
     fetcher: str = "double",
     discover: str = "scripted",
-    pass_timeout_s: int = 600,
-    dist_index_threshold: int = 50_000,
     decode_payload: bool = False,
     payload_images: int = 2,
     payload_scale: int = 1,
-    state_partitions: int | None = None,
 ) -> dict:
     """Run the streaming crawl to fixpoint (or ``max_rounds``);
     returns ``{"rounds": [...], "fixpoint": bool, "next_round": int}``
@@ -230,13 +179,10 @@ def stream_crawl_job(
     # row count — so the right default is the number of executor slots
     # (defaultParallelism), not the SQL shuffle width tuned for joins
     # (r6 profile: 64 shards -> 32 on local[32] cut ~0.7s/round of
-    # pure commit overhead at identical results). Raise
-    # ``state_partitions`` explicitly when the host space is large
-    # enough that per-shard seen-sets need finer spreading; an existing
+    # pure commit overhead at identical results). An existing
     # checkpoint keeps the width it was created with (Spark pins it in
     # the offset metadata), so resume is unaffected.
-    if state_partitions is None:
-        state_partitions = spark.sparkContext.defaultParallelism
+    state_partitions = spark.sparkContext.defaultParallelism
 
     if resume and os.path.exists(meta_path):
         with open(meta_path) as fh:
@@ -306,7 +252,7 @@ def stream_crawl_job(
                 .trigger(availableNow=True)
                 .start()
             )
-            terminated = q.awaitTermination(pass_timeout_s)
+            terminated = q.awaitTermination(_PASS_TIMEOUT_S)
         finally:
             spark.conf.set(shuffle_conf, prev_shuffle)
         if not terminated:
@@ -316,7 +262,7 @@ def stream_crawl_job(
             q.stop()
             raise RuntimeError(
                 f"streaming pass for round {feeder_round} exceeded "
-                f"{pass_timeout_s}s; feeder state NOT committed — "
+                f"{_PASS_TIMEOUT_S}s; feeder state NOT committed — "
                 "re-run with resume=True (the gate checkpoint dedups)"
             )
 
@@ -338,10 +284,7 @@ def stream_crawl_job(
         # set but get NO crawl-order position and do not count as
         # fetched — the batch oracle's semantics (they also yield no
         # children: only status='ok' rows discover)
-        frontier, n_disc, counters = _next_frontier(
-            out, disc, discover, fanout, n_hosts, dist_index_threshold,
-            counters=counters,
-        )
+        frontier, n_disc, counters = _next_frontier(out, disc, fanout, counters=counters)
 
         # COMMIT POINT: persist the feeder state for this round. The
         # frontier write is the action that materializes the barrier;

@@ -12,7 +12,9 @@ This module is the Structured-Streaming shape of
   most ``host_budget`` fetches per micro-batch (the token-bucket
   refill interval). Overflow is emitted as ``status='deferred'`` for
   the feeder to re-queue — the same defer-to-next-wave semantics as
-  the batch crawl's round loop.
+  the batch crawl's round loop. Each admitted URL goes through the
+  batch crawl's own fetch kernel (``spark_frontier.fetch_url``), so
+  both shapes fetch, decode and discover identically.
 - **the discovery loop is the outer system**: Structured Streaming
   queries are acyclic by design, so children feed back through the
   source (a Kafka topic / Delta table in production; appended files in
@@ -147,17 +149,6 @@ def _encode_seen(seen: set) -> list:
     return sorted(v - (1 << 64) if v >= 1 << 63 else v for v in seen)
 
 
-@functools.lru_cache(maxsize=64)
-def _cached_archive(idx: int, images: int, scale: int) -> bytes:
-    """Synthetic archive pool for decode_payload with the scripted
-    double — module-level so the cache lives for the Python worker's
-    lifetime (the long-running-service amortization; the batch path's
-    per-task lru_cache in ``_fetch_batches`` is the same contract)."""
-    from ..sources.corpus import build_archive
-
-    return build_archive(idx, images, scale)
-
-
 def _admit_host_batch(
     host: str, batch, seen: set, host_budget: int, use_robots: bool,
     fetcher: str = "double",
@@ -167,77 +158,28 @@ def _admit_host_batch(
     payload_scale: int = 1,
     emit_children: tuple[int, int] | None = None,
 ):
-    """The per-host admission kernel, shared by BOTH stateful-operator
-    shapes (applyInPandasWithState and transformWithStateInPandas):
-    sort the micro-batch by the crawl priority (depth, host_rank,
-    disc_seq), dedup first-discovery-wins against the batch and the
-    host's all-time seen set (mutated in place), fetch up to the
-    host's token budget, defer the rest. Returns (rows, admitted).
+    """The per-host admission kernel of the politeness gate: sort the
+    micro-batch by the crawl priority (depth, host_rank, disc_seq),
+    dedup first-discovery-wins against the batch and the host's
+    all-time seen set (mutated in place), fetch up to the host's token
+    budget through the batch crawl's own :func:`fetch_url` kernel,
+    defer the rest. Returns (rows, admitted).
+
+    Rows carry ``children`` when ``discover="parse"`` (links parsed
+    from the fetched bytes) or ``emit_children=(fanout, n_hosts)``
+    (the scripted world's children, whatever the fetcher).
 
     With ``use_robots`` the host's robots rules gate admission:
     disallowed URLs emit ``status='blocked'`` once and join the seen
     set; the crawl-delay level scales the per-micro-batch token
     refill, the same token-bucket rule as the batch crawl."""
-    from ..frontier.fixtures import (
-        fetch_with_retries,
-        host_token_budget,
-        robots_allows,
-    )
+    from ..frontier.fixtures import host_token_budget, robots_allows
     from ..frontier.seenset import url_hash64
+    from ..frontier.spark_frontier import fetch_url
 
-    parse_links = discover == "parse"
-    with_children = parse_links or emit_children is not None
-    if decode_payload:
-        # north-rule parity with the batch crawl's fetch stage: each
-        # ok fetch runs the MHTML payload decode inline (real bytes
-        # with the http client, the synthetic pool with the double)
-        from ..mime.splitter import parse_mhtml
-    if fetcher == "http":
-        # production seam: real sockets, same retry contract/code as
-        # the double (frontier/httpclient.py). With discover="parse"
-        # the fetched bytes also yield the page's anchor links (the
-        # real-crawl collecting walk); without decode_payload the gate
-        # keeps only the (status, attempts, delay) triple and payload
-        # decode is a downstream stage
-        from ..frontier.httpclient import fetch_url_with_retries
-
-        if parse_links:
-            from ..frontier.spark_frontier import extract_links
-
-        def do_fetch(u):
-            status, attempts, delay, _ct, body = fetch_url_with_retries(u)
-            kids = (
-                extract_links(body)
-                if parse_links and status == "ok" and body
-                else []
-            )
-            if decode_payload and status == "ok" and body:
-                parse_mhtml(body)
-            return status, attempts, delay, kids
-    else:
-        if emit_children is not None:
-            # scripted discovery riding the fetch itself (the batch
-            # crawl's shape, spark_frontier._fetch_batches): children
-            # in document order, eligibility-filtered before numbering
-            from ..frontier.fixtures import children_of
-            from ..urlnorm import is_fetchable
-
-            fanout, n_hosts = emit_children
-
-        def do_fetch(u):
-            out = fetch_with_retries(u)
-            if decode_payload and out[0] == "ok":
-                parse_mhtml(
-                    _cached_archive(
-                        url_hash64(u) % 64, payload_images, payload_scale
-                    )
-                )
-            kids = (
-                [c for c in children_of(u, fanout, n_hosts) if is_fetchable(c)]
-                if emit_children is not None and out[0] == "ok"
-                else []
-            )
-            return out + (kids,)
+    with_children = discover == "parse" or emit_children is not None
+    kernel_discover = discover if with_children else None
+    fanout, n_hosts = emit_children or (0, 0)
 
     budget = host_token_budget(host, host_budget) if use_robots else host_budget
     # revisit rows (recrawl manifests) FORGET their key first, so the
@@ -277,7 +219,10 @@ def _admit_host_batch(
             rows.append({**base, "status": "blocked", "attempts": 0, "delay_ms": 0})
             continue
         if admitted < budget:
-            status, attempts, delay_ms, kids = do_fetch(r.key)
+            status, attempts, delay_ms, kids = fetch_url(
+                r.key, fetcher, kernel_discover, decode_payload, payload_images,
+                payload_scale, fanout, n_hosts,
+            )
             seen.add(h)
             admitted += 1
             row = {**base, "status": status, "attempts": attempts, "delay_ms": delay_ms}
@@ -290,7 +235,7 @@ def _admit_host_batch(
 
 
 _GATE_COLUMNS = ["key", "url", "host", "depth", "disc_seq", "status", "attempts", "delay_ms"]
-_GATE_COLUMNS_PARSE = _GATE_COLUMNS + ["children"]
+_GATE_COLUMNS_CHILDREN = _GATE_COLUMNS + ["children"]
 
 
 def _politeness_gate(
@@ -318,14 +263,7 @@ def _politeness_gate(
         state.remove()
         return
     if state.exists:
-        vals = state.get
-        # pre-r4 checkpoints carried 3 state fields (no revisit
-        # pending set); tolerate both layouts. NOTE: Spark's state
-        # store ALSO validates the declared schema, so restoring an
-        # old checkpoint additionally needs its state rewritten to the
-        # 4-field layout offline (the catalog migration note applies)
-        seen_list, fetched_total, bloom_blob = vals[0], vals[1], vals[2]
-        pending_list = vals[3] if len(vals) > 3 else []
+        seen_list, fetched_total, bloom_blob, pending_list = state.get
         seen = HostSeen(
             _decode_seen(seen_list), bloom_blob, graduate_after,
             pending=_decode_seen(pending_list or []),
@@ -342,7 +280,7 @@ def _politeness_gate(
     )
     state.update(seen.state_tuple(fetched_total + admitted))
     cols = (
-        _GATE_COLUMNS_PARSE
+        _GATE_COLUMNS_CHILDREN
         if (discover == "parse" or emit_children is not None)
         else _GATE_COLUMNS
     )
@@ -364,11 +302,12 @@ def stream_frontier_fetch(
 ) -> DataFrame:
     """(url, depth, disc_seq) stream → fetch-result stream.
 
-    ``emit_children=(fanout, n_hosts)`` makes the SCRIPTED double emit
-    each ok fetch's eligibility-filtered children in document order
-    (the batch crawl's fetch-UDF shape), adding a ``children`` column
-    to the output — the feeder then derives the next frontier with one
-    JVM posexplode instead of a second Python pass per round. Default
+    ``emit_children=(fanout, n_hosts)`` makes the gate emit each ok
+    fetch's scripted, eligibility-filtered children in document order,
+    whatever the fetcher (the batch crawl's fetch-UDF shape), adding a
+    ``children`` column to the output — the feeder then derives the
+    next frontier with one JVM posexplode instead of a second Python
+    pass per round. Default
     off: the oracle-pinned gate pairs keep the 8-column schema.
 
     Output rows carry ``status`` ∈ {ok, failed, deferred, blocked};
@@ -422,110 +361,3 @@ def stream_frontier_fetch(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-class FrontierGateProcessor:
-    """transformWithStateInPandas twin of the politeness gate — the
-    Spark 4 successor API for custom stateful streaming operators
-    (typed state variables + timers instead of one opaque state tuple).
-    Output is byte-identical to :func:`stream_frontier_fetch`'s
-    applyInPandasWithState shape: both call :func:`_admit_host_batch`.
-
-    State layout: one ValueState per host holding (seen array<long>,
-    fetched_total long, bloom binary) — the same struct the GroupState
-    carries, so a checkpoint migration between the two operators is a
-    plain state rewrite. Requires the RocksDB state store provider
-    (TWS contract)."""
-
-    _graduate_after: int | None = None
-    _fetcher: str = "double"
-    _discover: str = "scripted"
-    _decode_payload: bool = False
-    _payload_images: int = 2
-    _payload_scale: int = 1
-
-    def init(self, handle):
-        self._gate = handle.getValueState("gate", _GATE_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        import pandas as pd
-
-        (host,) = key
-        if self._gate.exists():
-            seen_list, fetched_total, bloom_blob, pending_list = self._gate.get()
-            seen = HostSeen(
-                _decode_seen(seen_list), bloom_blob, self._graduate_after,
-                pending=_decode_seen(pending_list or []),
-            )
-        else:
-            seen, fetched_total = HostSeen(graduate_after=self._graduate_after), 0
-        batch = pd.concat(list(rows), ignore_index=True)
-        out, admitted = _admit_host_batch(
-            host, batch, seen, self._host_budget, self._use_robots,
-            fetcher=self._fetcher, discover=self._discover,
-            decode_payload=self._decode_payload,
-            payload_images=self._payload_images,
-            payload_scale=self._payload_scale,
-        )
-        self._gate.update(seen.state_tuple(fetched_total + admitted))
-        cols = _GATE_COLUMNS_PARSE if self._discover == "parse" else _GATE_COLUMNS
-        yield pd.DataFrame(out, columns=cols)
-
-    def close(self):
-        pass
-
-
-def stream_frontier_fetch_tws(
-    urls_stream: DataFrame,
-    host_budget: int = 8,
-    use_robots: bool = False,
-    graduate_after: int | None = None,
-    fetcher: str = "double",
-    discover: str = "scripted",
-    decode_payload: bool = False,
-    payload_images: int = 2,
-    payload_scale: int = 1,
-) -> DataFrame:
-    """:func:`stream_frontier_fetch` on the transformWithStateInPandas
-    API — same canonicalization, same admission kernel, same output
-    schema; only the stateful-operator binding differs. The session
-    must run the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass`` =
-    ``...RocksDBStateStoreProvider``)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    # bind the abstract base lazily so importing this module never
-    # requires the streaming extras at batch-only call sites
-    proc_cls = type(
-        "_BoundFrontierGateProcessor", (FrontierGateProcessor, StatefulProcessor), {}
-    )
-    if discover == "parse" and fetcher != "http":
-        raise ValueError('discover="parse" requires fetcher="http"')
-    proc = proc_cls()
-    # instance attributes (the class-level declarations are defaults,
-    # never mutated — two concurrently-configured gates must not share)
-    proc._host_budget = host_budget
-    proc._use_robots = use_robots
-    proc._graduate_after = graduate_after
-    proc._fetcher = fetcher
-    proc._discover = discover
-    proc._decode_payload = decode_payload
-    proc._payload_images = payload_images
-    proc._payload_scale = payload_scale
-
-    eligible = urls_stream.filter(F.col("url").rlike("^(?i)(https?|urn):"))
-    unwrapped = F.when(
-        F.col("url").rlike("^(?i)urn:[^:]+:.+"),
-        F.regexp_extract(F.col("url"), "^(?i)urn:[^:]+:(.+)$", 1),
-    ).otherwise(F.col("url"))
-    canon = eligible.withColumn("url", unwrapped).mapInPandas(
-        _canonicalize_batches, schema=_CANON_SCHEMA
-    )
-    return canon.groupBy("host").transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType=(
-            GATE_SCHEMA + ", children array<string>" if discover == "parse" else GATE_SCHEMA
-        ),
-        outputMode="append",
-        timeMode="none",
-    )

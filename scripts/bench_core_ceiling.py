@@ -39,7 +39,7 @@ DECODES_PER_TASK = 40
 
 
 def _kernel(seed: int) -> int:
-    """The fetch UDF's per-URL CPU work (spark_frontier._fetch_batches):
+    """The fetch UDF's per-URL CPU work (spark_frontier.fetch_url):
     scripted fetch + full MHTML decode. No sleep — the hold scales
     perfectly by construction; the CPU part is what contends."""
     from mhtml_to_html_spark.frontier.fixtures import fetch_with_retries

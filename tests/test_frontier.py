@@ -85,17 +85,19 @@ def test_spark_matches_oracle(spark, oracle_result, tmp_path):
 
 
 @pytest.mark.spark
-def test_spark_matches_oracle_with_range_partitioning(spark, oracle_result):
-    """The salted repartitionByRange physical path (forced on) must not
-    change the logical crawl order."""
+def test_spark_matches_oracle_with_range_partitioning(spark, oracle_result, monkeypatch):
+    """The distributed physical paths (forced on by the shared
+    threshold: salted repartitionByRange, two-pass fetch-position and
+    discovery indexes) must not change the logical crawl order."""
+    from mhtml_to_html_spark.frontier import indexing
     from mhtml_to_html_spark.frontier.spark_frontier import crawl_spark
 
+    monkeypatch.setattr(indexing, "DISTRIBUTED_ROWS", 0)
     res = crawl_spark(
         spark,
         SEEDS,
         max_rounds=MAX_ROUNDS,
         host_budget=BUDGET,
-        range_partition_threshold=0,
         collect_order=True,
     )
     assert res.order == oracle_result.order
@@ -167,6 +169,32 @@ def test_spark_resume_from_checkpoint(spark, oracle_result, tmp_path):
     assert resumed.order == oracle_result.order, "resumed crawl diverged"
     assert resumed.seen == oracle_result.seen
     assert resumed.failed == oracle_result.failed
+
+
+@pytest.mark.spark
+def test_resume_from_corrupt_seenset_raises(spark, tmp_path):
+    """A snapshot whose seen-set table is unreadable must fail the
+    resume loudly — never be silently rebuilt as if the table had not
+    been written."""
+    import glob
+
+    from mhtml_to_html_spark.frontier.spark_frontier import crawl_spark
+    from mhtml_to_html_spark.plans.catalog import SnapshotCatalog
+
+    ckpt = str(tmp_path / "corrupt_ckpt")
+    crawl_spark(spark, SEEDS, max_rounds=2, host_budget=BUDGET, checkpoint_dir=ckpt)
+    cat = SnapshotCatalog(ckpt)
+    seenset_dir = f"{cat._snap_dir(cat.latest()['snapshot_id'])}/seenset"
+    parts = glob.glob(f"{seenset_dir}/*.parquet")
+    assert parts
+    for path in parts:
+        with open(path, "r+b") as fh:
+            fh.truncate(len(fh.read()) // 2)
+    with pytest.raises(Exception, match="seenset"):
+        crawl_spark(
+            spark, SEEDS, max_rounds=MAX_ROUNDS, host_budget=BUDGET,
+            checkpoint_dir=ckpt, resume=True, collect_order=True,
+        )
 
 
 @pytest.mark.spark

@@ -31,6 +31,10 @@ class _Handler(BaseHTTPRequestHandler):
             self.send_header("Content-Type", "multipart/related")
             self.end_headers()
             self.wfile.write(ARCHIVE)
+        elif self.path.startswith("/empty"):  # ok with no body at all
+            self.send_response(200)
+            self.send_header("Content-Length", "0")
+            self.end_headers()
         elif self.path.startswith("/flaky"):  # 503 once, then ok
             if n == 1:
                 self.send_response(503)
@@ -193,6 +197,52 @@ def test_crawl_spark_http_fetcher_end_to_end(spark, server):
     assert m["ok"] == 6 and m["failed"] == 2
 
 
+def test_fetch_kernel_shared_by_batch_udf_and_gate(server, monkeypatch):
+    """Both crawl shapes fetch through one kernel, so with
+    fetcher='http' they agree where two copies used to diverge:
+    scripted discovery emits the scripted world's children in the
+    streaming gate exactly as in the batch fetch UDF, and an ok
+    response with an empty body decodes nothing — the synthetic
+    archive stand-in is never built for a real fetch."""
+    import pandas as pd
+
+    from mhtml_to_html_spark.frontier import children_of, host_rank
+    from mhtml_to_html_spark.frontier.spark_frontier import _fetch_batches
+    from mhtml_to_html_spark.sources import corpus
+    from mhtml_to_html_spark.streaming.frontier import HostSeen, _admit_host_batch
+    from mhtml_to_html_spark.urlnorm import is_fetchable, url_host
+
+    built = []
+    monkeypatch.setattr(corpus, "build_archive", lambda *a: built.append(a) or ARCHIVE)
+    keys = [f"{server}/ok/kernel", f"{server}/empty/kernel", f"{server}/gone/kernel"]
+    host = url_host(keys[0])
+    scripted = {
+        k: [c for c in children_of(k, 3, 7) if is_fetchable(c)] for k in keys[:2]
+    }
+    assert all(scripted.values())
+    want = {keys[0]: ("ok", scripted[keys[0]]), keys[1]: ("ok", scripted[keys[1]]),
+            keys[2]: ("failed", [])}
+
+    manifest = pd.DataFrame(
+        {"key": keys, "host": [host] * 3, "depth": [0] * 3, "disc_seq": [0, 1, 2],
+         "pos": [0, 1, 2]}
+    )
+    (batch_out,) = list(_fetch_batches(
+        iter([manifest]), decode_payload=True, fetcher="http", discover="scripted",
+        fanout=3, n_hosts=7,
+    ))
+    assert {r.key: (r.status, list(r.children)) for r in batch_out.itertuples()} == want
+
+    gate_in = manifest.drop(columns="pos").assign(url=keys, host_rank=host_rank(host))
+    rows, admitted = _admit_host_batch(
+        host, gate_in, HostSeen(), host_budget=10, use_robots=False, fetcher="http",
+        decode_payload=True, emit_children=(3, 7),
+    )
+    assert admitted == 3
+    assert {r["key"]: (r["status"], r["children"]) for r in rows} == want
+    assert built == []
+
+
 @pytest.mark.spark
 def test_streaming_gate_http_fetcher(spark, server, tmp_path):
     """The streaming politeness gate with fetcher='http': admission,
@@ -251,6 +301,7 @@ def test_crawl_spark_parse_discovery_real_world(spark):
     A 4-page site with a shared link (c linked from both a and b)
     must crawl exactly-once in BFS depth order."""
     from mhtml_to_html_spark.frontier.spark_frontier import crawl_spark, extract_links
+    from mhtml_to_html_spark.mime.splitter import parse_mhtml
 
     site = {}
 
@@ -280,7 +331,9 @@ def test_crawl_spark_parse_discovery_real_world(spark):
     t.start()
     try:
         # unit sanity: extraction resolves the relative href
-        assert extract_links(site["/site/b"]) == [f"{origin}/site/c", f"{origin}/site/d"]
+        assert extract_links(parse_mhtml(site["/site/b"])) == [
+            f"{origin}/site/c", f"{origin}/site/d",
+        ]
 
         res = crawl_spark(
             spark,

@@ -159,3 +159,31 @@ def test_expire_snapshots_collects_orphans_once_unreferenced(spark, tmp_path):
     cat.expire_snapshots(keep_last=2)
     # nothing retained references snap0 anymore: the orphan is gone
     assert not os.path.exists(cat._snap_dir(s0))
+
+
+@pytest.mark.spark
+def test_crash_mid_manifest_keeps_previous_snapshot(spark, tmp_path, monkeypatch):
+    """The manifest is the commit marker: a crash while it is being
+    dumped must leave the previous snapshot as ``latest()`` (and the
+    next write must reuse the uncommitted id), never a half-written
+    manifest that makes resume raise."""
+    import json
+
+    cat = SnapshotCatalog(str(tmp_path / "cat"))
+    df = spark.createDataFrame([(1, "a")], "k long, v string")
+    s0 = cat.write_snapshot({"t": df}, round_idx=0)
+
+    def crash(obj, fh, **kw):
+        fh.write('{"snapshot_id": 1, "tab')
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", crash)
+    with pytest.raises(OSError):
+        cat.write_snapshot({"t": df}, round_idx=1)
+    monkeypatch.undo()
+
+    latest = cat.latest()
+    assert latest["snapshot_id"] == s0 and latest["round"] == 0
+    assert cat.list_snapshots() == [s0]
+    assert cat.write_snapshot({"t": df}, round_idx=1) == s0 + 1
+    assert cat.latest()["round"] == 1

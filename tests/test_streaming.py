@@ -387,155 +387,40 @@ def test_streaming_frontier_matches_oracle_with_robots(spark, tmp_path):
     assert blocked_urls == oracle.blocked
 
 
-@pytest.mark.spark
-def test_tws_gate_matches_apply_in_pandas_gate(spark, tmp_path):
-    """The transformWithStateInPandas politeness gate (Spark 4 API)
-    emits EXACTLY what the applyInPandasWithState gate emits for the
-    same two micro-batches — both bind the same admission kernel, and
-    the second batch proves per-host state (exactly-once + budget)
-    survives between batches in both operators.
-
-    Environment-gated: pyspark's TWS state protocol needs protobuf,
-    which this container lacks; the stub-state parity test below keeps
-    the processor's logic covered here regardless."""
-    pytest.importorskip(
-        "google.protobuf", reason="transformWithStateInPandas needs protobuf"
-    )
-    from mhtml_to_html_spark.frontier.fixtures import seed_urls
-    from mhtml_to_html_spark.streaming.frontier import (
-        stream_frontier_fetch,
-        stream_frontier_fetch_tws,
-    )
-
-    schema = "url string, depth int, disc_seq long"
-    batches = [
-        # batch 0: over-budget host mix + an in-batch duplicate
-        [(u, 0, i) for i, u in enumerate(seed_urls(4, 3))]
-        + [(seed_urls(4, 3)[0], 0, 99)],
-        # batch 1: replays batch-0 URLs (must all dedup) + fresh ones
-        [(u, 1, 100 + i) for i, u in enumerate(seed_urls(4, 3))]
-        + [(f"https://tws{i}.example.net/x", 1, 200 + i) for i in range(3)],
-    ]
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        outs = {}
-        for variant, gate in (("aip", stream_frontier_fetch), ("tws", stream_frontier_fetch_tws)):
-            src = tmp_path / f"src_{variant}"
-            src.mkdir()
-            sink = str(tmp_path / f"sink_{variant}")
-            ckpt = str(tmp_path / f"ckpt_{variant}")
-            for rows in batches:
-                spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-                    "append"
-                ).parquet(str(src))
-                q = (
-                    gate(spark.readStream.schema(schema).parquet(str(src)), host_budget=2)
-                    .writeStream.foreachBatch(
-                        lambda df, bid, s=sink: df.coalesce(1).write.mode("append").parquet(s)
-                    )
-                    .outputMode("append")
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination(120)
-            outs[variant] = sorted(
-                tuple(r) for r in spark.read.parquet(sink).collect()
-            )
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-    assert outs["aip"], "gate emitted nothing"
-    assert outs["aip"] == outs["tws"]
-
-
-@pytest.mark.spark
-def test_tws_processor_kernel_parity_with_stub_state(spark):
-    """FrontierGateProcessor.handleInputRows against a stub ValueState
-    must emit the same rows and store the same state as the
-    applyInPandasWithState wrapper on the same per-host batch — this
-    pins the TWS binding (state encode/decode, budget wiring) without
-    needing Spark's TWS runtime (protobuf-gated in this container)."""
+def test_politeness_gate_state_carries_budget_across_batches():
+    """The applyInPandasWithState wrapper against a stub GroupState:
+    5 unique URLs (one in-batch duplicate) at budget 2 per batch — the
+    first batch fetches 2 and defers 3, a re-send of the same batch
+    fetches 2 of the deferred, and the state tuple carries the seen
+    set and the admission total between the two."""
     import pandas as pd
 
     from mhtml_to_html_spark.frontier.fixtures import host_rank
-    from mhtml_to_html_spark.streaming.frontier import (
-        FrontierGateProcessor,
-        _politeness_gate,
-    )
+    from mhtml_to_html_spark.streaming.frontier import _politeness_gate
 
     host = "host0.example.com"
+    urls = [f"https://{host}/p{i}" for i in range(5)] + [f"https://{host}/p0"]
     batch = pd.DataFrame(
-        {
-            "key": [f"https://{host}/p{i}" for i in range(5)] + [f"https://{host}/p0"],
-            "url": [f"https://{host}/p{i}" for i in range(5)] + [f"https://{host}/p0"],
-            "host": [host] * 6,
-            "depth": [0] * 6,
-            "host_rank": [host_rank(host)] * 6,
-            "disc_seq": [0, 1, 2, 3, 4, 9],
-        }
+        {"key": urls, "url": urls, "host": [host] * 6, "depth": [0] * 6,
+         "host_rank": [host_rank(host)] * 6, "disc_seq": [0, 1, 2, 3, 4, 9]}
     )
 
-    class StubValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
     class StubGroupState:
-        def __init__(self):
-            self._v = None
-            self.hasTimedOut = False
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
+        hasTimedOut = False
+        exists = False
+        get = None
 
         def update(self, v):
-            self._v = v
+            self.exists, self.get = True, v
 
-    class StubHandle:
-        def __init__(self, state):
-            self._state = state
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return self._state
-
-    tws_state = StubValueState()
-    proc = FrontierGateProcessor()
-    proc._host_budget = 2
-    proc._use_robots = False
-    proc.init(StubHandle(tws_state))
-
-    group_state = StubGroupState()
-
-    for rnd in range(2):  # second round re-sends the batch: all dedup
-        tws_out = pd.concat(list(proc.handleInputRows((host,), iter([batch]), None)))
-        aip_out = pd.concat(
-            list(_politeness_gate((host,), iter([batch]), group_state, host_budget=2))
-        )
-        pd.testing.assert_frame_equal(
-            tws_out.reset_index(drop=True), aip_out.reset_index(drop=True)
-        )
-        assert tws_state.get() == group_state.get  # identical state layout
-    # 5 unique urls, budget 2/round: round 0 fetches 2 (3 deferred),
-    # round 1 fetches 2 more of the deferred — 4 seen, 4 fetched total
-    assert tws_state.get()[1] == 4 and len(tws_state.get()[0]) == 4
+    state = StubGroupState()
+    statuses = []
+    for _ in range(2):
+        (out,) = _politeness_gate((host,), iter([batch]), state, host_budget=2)
+        statuses.append(sorted(out["status"].replace("failed", "ok")))
+    assert statuses == [["deferred"] * 3 + ["ok"] * 2, ["deferred"] + ["ok"] * 2]
+    seen_list, fetched_total, _bloom, _pending = state.get
+    assert fetched_total == 4 and len(seen_list) == 4
 
 
 def test_host_seen_bloom_graduation():
@@ -684,9 +569,9 @@ def test_streaming_frontier_revisit_readmits_exactly_marked_keys(spark, tmp_path
 
 
 def test_admit_host_batch_revisit_kernel_shared_by_both_bindings():
-    """The revisit path lives in the SHARED admission kernel, so both
-    stateful bindings get it: a batch with revisit-marked keys forgets
-    them from the host's seen set and refetches exactly them."""
+    """The revisit path lives in the gate's admission kernel: a batch
+    with revisit-marked keys forgets them from the host's seen set and
+    refetches exactly them."""
     import pandas as pd
 
     from mhtml_to_html_spark.frontier.fixtures import host_rank
@@ -769,6 +654,34 @@ def test_stream_crawl_job_restart_parity(spark, tmp_path):
     all_rounds = first["rounds"] + resumed["rounds"]
     assert [(m["round"], m["fetched"]) for m in all_rounds] == [
         (m["round"], m["fetched"]) for m in oracle.metrics
+    ]
+
+
+@pytest.mark.spark
+def test_stream_crawl_job_distributed_index_parity(spark, tmp_path, monkeypatch):
+    """The feeder's distributed discovery numbering (the shared index
+    threshold forced to 0, so every round takes the two-pass index)
+    must reproduce the batch oracle's crawl order and per-round
+    counters byte-for-byte."""
+    from mhtml_to_html_spark.frontier import indexing
+    from mhtml_to_html_spark.frontier.fixtures import seed_urls
+    from mhtml_to_html_spark.frontier.oracle import crawl_oracle
+    from mhtml_to_html_spark.streaming.feeder import (
+        stream_crawl_job,
+        stream_crawl_order,
+    )
+
+    monkeypatch.setattr(indexing, "DISTRIBUTED_ROWS", 0)
+    SEEDS, ROUNDS, BUDGET = seed_urls(4, 2), 3, 5
+    oracle = crawl_oracle(SEEDS, max_rounds=ROUNDS, host_budget=BUDGET, use_robots=True)
+    work = str(tmp_path / "dist_job")
+    res = stream_crawl_job(
+        spark, SEEDS, work, max_rounds=ROUNDS, host_budget=BUDGET, use_robots=True
+    )
+    assert stream_crawl_order(spark, work) == oracle.order
+    keys = ("round", "fetched", "ok", "failed", "deferred", "blocked")
+    assert [{k: m[k] for k in keys} for m in res["rounds"]] == [
+        {k: m[k] for k in keys} for m in oracle.metrics
     ]
 
 
